@@ -64,12 +64,6 @@ def write_table(
     w.saveAsTable(name)
 
 
-def create_view(df: DataFrame, name: str) -> None:
-    """K8 — dbt 'view' materialization (``dbt_project.yml:17-22``):
-    recomputed per query, zero storage."""
-    df.createOrReplaceTempView(name)
-
-
 def _union_with_target(
     spark: SparkSession, incoming: DataFrame, target_path: str
 ) -> DataFrame:

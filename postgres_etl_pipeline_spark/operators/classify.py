@@ -58,25 +58,6 @@ def md5_bucket(col: Column, n_buckets: int) -> Column:
     )
 
 
-def hashed_token_counts(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_N_BUCKETS,
-) -> DataFrame:
-    """Per-document hashed bag-of-words: ``(id_col, bucket, tf)``.
-
-    One explode + one (id, bucket) groupBy; the groupBy keys on the doc
-    id first so the aggregate re-uses the scoring sum's partitioning.
-    """
-    return (
-        df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
-        .select(id_col, md5_bucket(F.col("tok"), n_buckets).alias("bucket"))
-        .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
 def nb_train(
     docs: DataFrame,
     label: Column,

@@ -135,9 +135,3 @@ def load_testdata(spark, sf_dir: str, *tables: str):
     """Load driver testdata parquet tables as DataFrames (dict name→df)."""
     names = tables or TESTDATA_TABLES
     return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in names}
-
-
-def register_testdata_views(spark, sf_dir: str, *tables: str) -> None:
-    """Register testdata tables as temp views for spark.sql access."""
-    for name, df in load_testdata(spark, sf_dir, *tables).items():
-        df.createOrReplaceTempView(name)

@@ -567,13 +567,14 @@ def run_ivf_maintenance_sink(
     cadence (the stream_maintenance_tick catalog entry pins exactly
     that)."""
     from ..operators.similarity import (
-        append_to_ivf_index,
-        append_to_ivfpq_index,
+        _tier,
         delete_from_ivf_index,
         incremental_topk_update,
         maintain_index,
     )
 
+    # the index codec, looked up ONCE: every batch appends through it
+    tier = _tier(index_kind, "index_kind")
     if op_col is not None and queries is not None:
         raise ValueError(
             "op_col (tombstone deletes) cannot be combined with queries "
@@ -655,19 +656,9 @@ def run_ivf_maintenance_sink(
         assert last is not None
         raise last
 
-    if index_kind == "ivf":
-        _append = lambda df: append_to_ivf_index(  # noqa: E731
-            df, index_path, id_col, vec_col, extra_cols=extra_cols
-        )
-    elif index_kind == "ivfpq":
-        _append = lambda df: append_to_ivfpq_index(  # noqa: E731
-            df, index_path, id_col=id_col, vec_col=vec_col,
-            extra_cols=extra_cols,
-        )
-    else:
-        raise ValueError(
-            f"unknown index_kind {index_kind!r}: expected 'ivf' or 'ivfpq'"
-        )
+    def _append(df: DataFrame) -> None:
+        tier.append(df, index_path, id_col, vec_col, extra_cols)
+
     ckpt = checkpoint or _scratch_checkpoint("ckpt_ivf_maint_")
     topk_path = os.path.join(state_dir, "topk") if state_dir else None
     q_static = (

@@ -957,3 +957,69 @@ def test_append_during_rebuild_raises_instead_of_losing_rows(
     q = _q(emb)
     got = _rows(S.ivf_index_topk(spark, root, q, k=5, n_probe=4))
     assert got == _rows(S.brute_force_topk(emb, q, k=5))
+
+
+# ---------------------------------------------------------------------------
+# Versioned-root acceptance: every public entry point of both tiers
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("tier", ["ivf", "ivfpq"])
+def test_every_entry_point_accepts_a_versioned_root(
+    spark, sf_small, tmp_path, tier
+):
+    """Every public ANN entry point takes a versioned ROOT and acts on
+    its live version — append, delete, predicate delete, re-split,
+    coarse-drift measure, rebuild, index search and filtered search —
+    at both tiers (the raw-tier rebuild and predicate delete used to
+    read the root as a layout and fail)."""
+    pq = tier == "ivfpq"
+    emb = _emb(spark, sf_small)
+    q = _q(emb)
+    root = str(tmp_path / "idx")
+    if pq:
+        S.build_ivfpq_index_versioned(
+            emb.filter(F.col("vec_id") % 2 == 0), root, n_centroids=4,
+            extra_cols=("label",),
+        )
+    else:
+        S.build_ivf_index_versioned(
+            emb.filter(F.col("vec_id") % 2 == 0), root, n_centroids=4,
+            kmeans_max_iter=1, kmeans_init="random", extra_cols=("label",),
+        )
+    live = S.resolve_index_path(spark, root)
+    append = S.append_to_ivfpq_index if pq else S.append_to_ivf_index
+    append(emb.filter(F.col("vec_id") % 2 == 1), root, extra_cols=("label",))
+    gone = {int(r[0]) for r in emb.select("vec_id").orderBy("vec_id").limit(2).collect()}
+    first, second = sorted(gone)
+    delete = S.delete_from_ivfpq_index if pq else S.delete_from_ivf_index
+    assert delete(spark, root, emb.filter(F.col("vec_id") == first))
+    assert S.delete_where_from_ivf_index(
+        spark, root, F.col("neighbor_id") == second
+    )
+    resplit = S.resplit_ivfpq_cell if pq else S.resplit_ivf_cell
+    assert len(resplit(spark, root, n_sub=2, kmeans_max_iter=1)) == 5
+    stored = {
+        int(r[0])
+        for r in spark.read.parquet(live).select("neighbor_id").collect()
+    }
+    assert stored == {int(r[0]) for r in emb.select("vec_id").collect()} - gone
+    measure = S.measure_ivfpq_coarse_drift if pq else S.measure_ivf_coarse_drift
+    err, base = measure(spark, root)
+    assert err > 0 and base > 0
+    rebuild = S.rebuild_ivfpq_index if pq else S.rebuild_ivf_index
+    assert rebuild(spark, root, str(tmp_path / "blue"), force=True) is not None
+    qids = {int(r[0]) for r in q.select("vec_id").collect()}
+    if pq:
+        hits = S.ivfpq_index_topk(spark, root, q, k=5, n_probe=5)
+        filtered = S.filtered_ivfpq_topk(
+            spark, root, q, filter_col="label", k=5, n_probe=2
+        )
+    else:
+        hits = S.ivf_index_topk(spark, root, q, k=5, n_probe=5)
+        filtered = S.filtered_ivf_topk(
+            spark, root, q, filter_col="label", k=5, n_probe=2
+        )
+    for rows in (_rows(hits), _rows(filtered)):
+        assert {r[0] for r in rows} == qids
+        assert not {r[1] for r in rows} & gone

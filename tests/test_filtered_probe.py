@@ -65,12 +65,12 @@ def test_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
                 spark, path, q, filter_col="label", k=5, n_probe=n_probe,
             )
         )
-        orig = S._filtered_ivf_topk_driver
+        orig = S._filtered_topk_driver
         try:
             def boom(*a, **k):
                 raise AssertionError("driver tier ran above the cut")
 
-            S._filtered_ivf_topk_driver = boom
+            S._filtered_topk_driver = boom
             via_dist = _rows(
                 S.filtered_ivf_topk(
                     spark, path, q, filter_col="label", k=5, n_probe=n_probe,
@@ -78,7 +78,7 @@ def test_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
                 )
             )
         finally:
-            S._filtered_ivf_topk_driver = orig
+            S._filtered_topk_driver = orig
         assert via_dist == via_driver, n_probe
 
 
@@ -121,13 +121,13 @@ def test_probe_jump_same_output_fewer_rounds(spark, tmp_path):
     with_stats = _rows(
         S.filtered_ivf_topk(spark, path, q, filter_col="label", k=5, n_probe=1)
     )
-    jump_rounds = S._filtered_ivf_topk_driver.last_rounds
+    jump_rounds = S._filtered_topk_driver.last_rounds
     # remove the sidecar → pure fill-driven expansion
     shutil.rmtree(path + "_stats_label")
     no_stats = _rows(
         S.filtered_ivf_topk(spark, path, q, filter_col="label", k=5, n_probe=1)
     )
-    fill_rounds = S._filtered_ivf_topk_driver.last_rounds
+    fill_rounds = S._filtered_topk_driver.last_rounds
     assert with_stats == no_stats
     assert jump_rounds < fill_rounds, (jump_rounds, fill_rounds)
     assert jump_rounds == 1  # selective label fills in ONE round trip
@@ -195,12 +195,12 @@ def test_ivfpq_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
                 n_probe=n_probe,
             )
         )
-        orig = S._filtered_ivfpq_topk_driver
+        orig = S._filtered_topk_driver
         try:
             def boom(*a, **kw):
                 raise AssertionError("driver tier ran above the cut")
 
-            S._filtered_ivfpq_topk_driver = boom
+            S._filtered_topk_driver = boom
             via_dist = _rows(
                 S.filtered_ivfpq_topk(
                     spark, path, q, filter_col="label", k=5, rerank=4,
@@ -208,7 +208,7 @@ def test_ivfpq_distributed_tier_matches_driver_tier(spark, sf_small, tmp_path):
                 )
             )
         finally:
-            S._filtered_ivfpq_topk_driver = orig
+            S._filtered_topk_driver = orig
         assert via_dist == via_driver, n_probe
 
 
@@ -257,7 +257,7 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
             distributed_cut=0,
         )
     )
-    assert S._filtered_ivf_topk_distributed.last_rounds == 1
+    assert S._filtered_topk_distributed.last_rounds == 1
     assert {g[1] for g in got} == {40, 41, 42, 43, 44}
     assert got == _rows(S.filtered_topk(emb, q, filter_col="label", k=5))
     # compressed tier: pool-targeted jump (rerank=1 → pool = k)
@@ -272,7 +272,7 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
             distributed_cut=0,
         )
     )
-    assert S._filtered_ivfpq_topk_distributed.last_rounds == 1
+    assert S._filtered_topk_distributed.last_rounds == 1
     assert len(got2) == 5
     # and the non-jumping fill-driven path (sidecar removed) agrees
     import shutil
@@ -284,7 +284,7 @@ def test_distributed_tiers_take_the_selectivity_jump(spark, tmp_path):
             distributed_cut=0,
         )
     )
-    assert S._filtered_ivfpq_topk_distributed.last_rounds > 1
+    assert S._filtered_topk_distributed.last_rounds > 1
 
 
 # ---------------------------------------------------------------------------
@@ -354,4 +354,4 @@ def test_stats_regenerate_through_versioned_rebuild(spark, tmp_path):
     )
     assert got == want
     # the sized first probe is intact post-rebuild: one round trip
-    assert S._filtered_ivf_topk_driver.last_rounds == 1
+    assert S._filtered_topk_driver.last_rounds == 1
